@@ -23,7 +23,7 @@ import graft.functions.VectorFunctions.toDouble
   * deliberate algorithm change moves them, re-pin with the printed value
   * and say why in the commit.
   */
-class FingerprintSpec extends SparkSpec {
+class FingerprintSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -165,6 +165,125 @@ class FingerprintSpec extends SparkSpec {
       assert(got == want,
         s"pq_opq_recon rotation changed at $dir: $got — deterministic-eigensolve " +
           "contract broken (or a deliberate algorithm change: re-pin and justify)")
+    }
+  }
+
+  /** md5 over an output frame's rows, sorted, every double at full
+    * precision — the search pins below compare whole result sets, not
+    * one spelling against another, so a refactor of the search kernels
+    * is held to the rows it produced before.
+    */
+  private def rowsFingerprint(df: org.apache.spark.sql.DataFrame): String =
+    md5Hex(df.collect().map(_.toSeq.mkString(",")).sorted.mkString("\n"))
+
+  private def embeddings(dir: String) =
+    Q.t(spark, dir, "embeddings")
+      .select(col("vec_id"), toDouble(col("embedding")).as("vec"), col("label"))
+
+  /** PQ codebook fit on the id-sorted driver rows: `train` collects in
+    * file-listing order, which is not a contract of the artifact.
+    */
+  private def idSortedPq(
+      dir: String, m: Int, k: Int, seed: Long): graft.operators.PQModel =
+    graft.operators.ProductQuantizer.fitLocal(
+      embeddings(dir).orderBy(col("vec_id")).collect()
+        .map(_.getSeq[Double](1).toArray),
+      m, k, seed)
+
+  private def hnswQueries(dir: String) =
+    embeddings(dir)
+      .filter(col("vec_id") % 10 === 0)
+      .select(col("vec_id").as("query_id"), col("vec").as("qv"))
+
+  private val rawShards = scala.collection.mutable.Map.empty[String, DistributedHnsw.Shards]
+  private def rawShardsAt(dir: String): DistributedHnsw.Shards =
+    rawShards.getOrElseUpdate(dir, DistributedHnsw.build(
+      embeddings(dir), "vec_id", "vec",
+      HnswParams(m = 16, efConstruction = 100), numShards = 4, seed = 42))
+
+  override def afterAll(): Unit = {
+    rawShards.values.foreach(_.unpersist())
+    super.afterAll()
+  }
+
+  private def pinned(what: String, wants: Seq[(String, String)])(
+      got: String => String): Unit =
+    for ((dir, want) <- wants) {
+      val g = got(dir)
+      info(s"$what fingerprint ($dir): $g")
+      assert(g == want,
+        s"$what output changed at $dir: $g — search-path contract broken " +
+          "(or a deliberate algorithm change: re-pin and justify)")
+    }
+
+  test("DistributedHnsw.search raw: output md5 pinned at both SFs") {
+    pinned("hnsw search", Seq(sf001 -> "1a684bbbdabd829dba1b886348000ad8", sf0001 -> "b1fd15262a7da7c6c1ab368f8fa4c44c")) { dir =>
+      rowsFingerprint(DistributedHnsw.search(
+        rawShardsAt(dir), hnswQueries(dir), "query_id", "qv", k = 10))
+    }
+  }
+
+  test("DistributedHnsw.search with PQCompression: output md5 pinned at both SFs") {
+    import graft.operators.PQCompression
+    pinned("hnsw pq search", Seq(sf001 -> "7b0ee7def6dbf1dad0f85f6ba0a243db", sf0001 -> "3c92fe8900d011403d017ea51f5589d5")) { dir =>
+      val comp = new PQCompression(idSortedPq(dir, m = 8, k = 64, seed = 42))
+      val s = DistributedHnsw.build(
+        embeddings(dir), "vec_id", "vec",
+        HnswParams(m = 16, efConstruction = 100),
+        numShards = 4, seed = 42, compression = Some(comp))
+      val fp = rowsFingerprint(DistributedHnsw.search(
+        s, hnswQueries(dir), "query_id", "qv", k = 10, compression = Some(comp)))
+      s.unpersist()
+      fp
+    }
+  }
+
+  test("DistributedHnsw.searchEfCurve: output md5 pinned at both SFs") {
+    pinned("hnsw ef curve", Seq(sf001 -> "c2aaf808425843bb8cd62a5130dc89f2", sf0001 -> "6639f5583081133392176c308d2df862")) { dir =>
+      rowsFingerprint(DistributedHnsw.searchEfCurve(
+        rawShardsAt(dir), hnswQueries(dir), "query_id", "qv", k = 10,
+        Seq(10, 40, 200)))
+    }
+  }
+
+  test("DistributedHnsw.searchFiltered under a 50% allow set: output md5 pinned at both SFs") {
+    pinned("hnsw filtered search", Seq(sf001 -> "45231c29e397bbb7b11db2b08bd7f732", sf0001 -> "201ff167b683ab46920afd1201791aaf")) { dir =>
+      rowsFingerprint(DistributedHnsw.searchFiltered(
+        rawShardsAt(dir), hnswQueries(dir), "query_id", "qv", k = 10,
+        allowedIds = embeddings(dir).filter(col("label") <= 4).select(col("vec_id")),
+        efSearch = 200))
+    }
+  }
+
+  private def prunedGraph(dir: String) = {
+    import graft.operators.NNDescent
+    val emb = embeddings(dir).select(col("vec_id").as("id"), col("vec"))
+    NNDescent.robustPrune(
+      NNDescent.knnGraph(emb, "id", "vec", 10, iterations = 2),
+      emb, "id", "vec", 1.2, 8)
+  }
+
+  test("NNDescent.beamSearch: output md5 pinned at both SFs") {
+    import graft.operators.NNDescent
+    pinned("beam search", Seq(sf001 -> "b2c721c56c430efd06d814cd629dc96f", sf0001 -> "e1995b7b026fa0e475a979face9079d0")) { dir =>
+      val emb = embeddings(dir).select(col("vec_id").as("id"), col("vec"))
+      rowsFingerprint(NNDescent.beamSearch(
+        prunedGraph(dir), emb, "id", "vec", hnswQueries(dir), "query_id", "qv",
+        10, beam = 24, rounds = 6, entryId = 0L))
+    }
+  }
+
+  test("NNDescent.beamSearchCompressed: output md5 pinned at both SFs") {
+    import graft.operators.{NNDescent, ProductQuantizer}
+    pinned("compressed beam search", Seq(sf001 -> "9964bf0350436fced47f51dbcf82630f", sf0001 -> "8d0c03851abd6e2e471c90a7fbf6046b")) { dir =>
+      val emb = embeddings(dir).select(col("vec_id").as("id"), col("vec"))
+      val model = idSortedPq(dir, m = 8, k = 16, seed = 7)
+      val codes = emb.select(
+        col("id"), ProductQuantizer.encodeCol(model, col("vec")).as("code"))
+      rowsFingerprint(NNDescent.beamSearchCompressed(
+        prunedGraph(dir), codes, model, emb, "id", "vec",
+        hnswQueries(dir), "query_id", "qv",
+        10, beam = 24, rounds = 6, entryId = 0L))
     }
   }
 }

@@ -86,6 +86,15 @@ class PropertySpec extends SparkSpec {
     assert(small.subsetOf(large), s"lost pairs: ${small -- large}")
   }
 
+  test("top-k buffer: NaN ranks after every finite distance (one total order)") {
+    // a NaN at the heap root must not reject the finite distances behind it
+    val buf = new graft.functions.TopKBuffer(2)
+    buf.add(Double.NaN, 0L)
+    buf.add(3.0, 1L)
+    buf.add(1.0, 2L)
+    assert(buf.sortedEntries.toSeq == Seq((1.0, 2L), (3.0, 1L)))
+  }
+
   test("top-k is always a prefix of the full (dist, id) sort") {
     forSamples(Gen.zip(dataGen, vecGen)) { case (data, q) =>
       if (data.nonEmpty) {
