@@ -34,10 +34,13 @@ object Diag {
         val j = stageToJob.get(e.stageId)
         Option(tasks.get(j)).foreach(_.incrementAndGet())
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val (t0, ns, _) = jobs.get(e.jobId)
-        out.add(f"job ${e.jobId}%3d ${e.time - t0}%5d ms  stages=$ns%2d tasks=${tasks.get(e.jobId).get}%4d")
-      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        // a job whose start event was missed (e.g. posted before the
+        // listener attached) has no start row: skip it, never crash
+        Option(jobs.get(e.jobId)).foreach { case (t0, ns, _) =>
+          val nt = Option(tasks.get(e.jobId)).map(_.get).getOrElse(0)
+          out.add(f"job ${e.jobId}%3d ${e.time - t0}%5d ms  stages=$ns%2d tasks=$nt%4d")
+        }
     })
     // warmup
     SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()

@@ -22,10 +22,8 @@ final class TopKBuffer(val k: Int) {
   val heap = new java.util.PriorityQueue[(Double, Long)](
     math.max(k, 1),
     new java.util.Comparator[(Double, Long)] {
-      def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-      }
+      def compare(a: (Double, Long), b: (Double, Long)): Int =
+        TopKBuffer.compare(b._1, b._2, a._1, a._2)
     }
   )
 
@@ -33,7 +31,7 @@ final class TopKBuffer(val k: Int) {
     if (heap.size < k) heap.add((dist, id))
     else {
       val worst = heap.peek()
-      if (dist < worst._1 || (dist == worst._1 && id < worst._2)) {
+      if (TopKBuffer.compare(dist, id, worst._1, worst._2) < 0) {
         heap.poll()
         heap.add((dist, id))
       }
@@ -45,9 +43,21 @@ final class TopKBuffer(val k: Int) {
     scala.util.Sorting.stableSort(
       arr,
       (a: (Double, Long), b: (Double, Long)) =>
-        a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
+        TopKBuffer.compare(a._1, a._2, b._1, b._2) < 0
     )
     arr
+  }
+}
+
+object TopKBuffer {
+
+  /** The one (dist asc, id asc) order: `java.lang.Double.compare` puts
+    * NaN after +Inf and -0.0 before 0.0, so a NaN at the heap root can
+    * never reject a finite distance.
+    */
+  def compare(da: Double, ia: Long, db: Double, ib: Long): Int = {
+    val c = java.lang.Double.compare(da, db)
+    if (c != 0) c else java.lang.Long.compare(ia, ib)
   }
 }
 

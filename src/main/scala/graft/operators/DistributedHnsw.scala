@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -279,18 +280,9 @@ object DistributedHnsw {
       k: Int,
       efSearch: Int = -1,
       compression: Option[VectorCompression] = None
-  ): DataFrame = {
-    val spark = shards.vectors.sparkSession
-    import spark.implicits._
-    val nShards = shards.numShards
-    val queryRdd = queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .rdd.flatMap { case (id, v) =>
-        (0 until nShards).iterator.map(s => (s, (id, v)))
-      }
-    searchQueryRdd(shards, queryRdd, qidCol, k, efSearch, compression)
-  }
+  ): DataFrame =
+    searchQueries(shards, fanOut(shards, queries, qidCol, qvecCol),
+      qidCol, k, Array(efSearch), curve = false, compression)
 
   /** Operating-curve search: ONE shard cogroup (one adjacency rebuild,
     * one upper-layer descent per query) serving EVERY efSearch setting —
@@ -310,59 +302,9 @@ object DistributedHnsw {
       k: Int,
       efs: Seq[Int],
       compression: Option[VectorCompression] = None
-  ): DataFrame = {
-    val spark = shards.vectors.sparkSession
-    import spark.implicits._
-    val nShards = shards.numShards
-    val params = shards.params
-    val efArr = efs.toArray
-    val queryRdd = queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .rdd.flatMap { case (id, v) =>
-        (0 until nShards).iterator.map(s => (s, (id, v)))
-      }
-    val edgeRdd = shards.edges
-      .as[(Int, Int, Long, Long)]
-      .rdd.map { case (s, l, a, b) => (s, (l, a, b)) }
-    val entryRdd = shards.entries
-      .as[(Int, Long, Int)]
-      .rdd.map { case (s, ep, h) => (s, (ep, h)) }
-    val raw = (compression match {
-      case Some(c) =>
-        val codeRdd = shards.codes.getOrElse(shardCodes(shards.vectors, c))
-          .select(col("shard"), col("id"), col("code"))
-          .as[(Int, Long, Seq[Short])]
-          .rdd.map { case (s, id, cd) => (s, (id, cd)) }
-        searchShardsMulti[Seq[Short]](
-          codeRdd, edgeRdd, entryRdd, queryRdd, k, efArr,
-          (codes, height) => LocalGraphSearcher.compressed(
-            codes.map(_.toArray), height, params, c)
-        )
-      case None =>
-        val vecRdd = shards.vectors
-          .select(col("shard"), col("id"), col("vec"))
-          .as[(Int, Long, Seq[Double])]
-          .rdd.map { case (s, id, v) => (s, (id, v)) }
-        searchShardsMulti[Seq[Double]](
-          vecRdd, edgeRdd, entryRdd, queryRdd, k, efArr,
-          (vecs, height) => LocalGraphSearcher.raw(
-            vecs.map(_.toArray), height, params)
-        )
-    }).toDF("ef", "query_id", "neighbor_id", "dist")
-    raw
-      .groupBy(col("ef"), col("query_id"))
-      .agg(topK(col("dist"), col("neighbor_id"), k).as("tk"))
-      .select(col("ef"), col("query_id"),
-        posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("ef").cast("long").as("ef"),
-        col("query_id").as(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
-  }
+  ): DataFrame =
+    searchQueries(shards, fanOut(shards, queries, qidCol, qvecCol),
+      qidCol, k, efs.toArray, curve = true, compression)
 
   /** Routed search over a [[buildClustered]] index: each query visits
     * only its `nProbeShards` nearest shards (by shard centroid — the same
@@ -393,41 +335,52 @@ object DistributedHnsw {
         col(qvecCol).cast("array<double>"))
       .as[(Int, Long, Seq[Double])]
       .rdd.map { case (s, id, v) => (s, (id, v)) }
-    searchQueryRdd(shards, queryRdd, qidCol, k, efSearch, compression)
+    searchQueries(shards, queryRdd, qidCol, k, Array(efSearch),
+      curve = false, compression)
   }
 
-  /** Search kernel shared by the fan-out and routed paths: co-locate base
-    * table / edges / entry / the (shard, query) pairs per shard, rebuild a
-    * local index (graph replay — no random level draws, so exactly the
-    * built graph), merge per-query.
-    */
-  private def searchQueryRdd(
+  /** Every query replicated to every shard, as (shard, (qid, qvec)). */
+  private def fanOut(
       shards: Shards,
-      queryRdd: org.apache.spark.rdd.RDD[(Int, (Long, Seq[Double]))],
+      queries: DataFrame,
+      qidCol: String,
+      qvecCol: String
+  ): RDD[(Int, (Long, Seq[Double]))] = {
+    val spark = shards.vectors.sparkSession
+    import spark.implicits._
+    val nShards = shards.numShards
+    queries
+      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
+      .as[(Long, Seq[Double])]
+      .rdd.flatMap { case (id, v) =>
+        (0 until nShards).iterator.map(s => (s, (id, v)))
+      }
+  }
+
+  /** Search path shared by the fan-out, curve and routed searches: pick
+    * the per-node payload — the persisted (or derived) code table when
+    * compressed, raw vectors otherwise — run the shard kernel, merge.
+    */
+  private def searchQueries(
+      shards: Shards,
+      queryRdd: RDD[(Int, (Long, Seq[Double]))],
       qidCol: String,
       k: Int,
-      efSearch: Int,
+      efs: Array[Int],
+      curve: Boolean,
       compression: Option[VectorCompression]
   ): DataFrame = {
     val spark = shards.vectors.sparkSession
     import spark.implicits._
     val params = shards.params
-
-    val edgeRdd = shards.edges
-      .as[(Int, Int, Long, Long)]
-      .rdd.map { case (s, l, a, b) => (s, (l, a, b)) }
-    val entryRdd = shards.entries
-      .as[(Int, Long, Int)]
-      .rdd.map { case (s, ep, h) => (s, (ep, h)) }
-
-    val results = (compression match {
+    val results = compression match {
       case Some(c) =>
         val codeRdd = shards.codes.getOrElse(shardCodes(shards.vectors, c))
           .select(col("shard"), col("id"), col("code"))
           .as[(Int, Long, Seq[Short])]
           .rdd.map { case (s, id, cd) => (s, (id, cd)) }
         searchShards[Seq[Short]](
-          codeRdd, edgeRdd, entryRdd, queryRdd, k, efSearch,
+          shards, codeRdd, queryRdd, k, efs,
           (codes, height) => LocalGraphSearcher.compressed(
             codes.map(_.toArray), height, params, c)
         )
@@ -437,24 +390,12 @@ object DistributedHnsw {
           .as[(Int, Long, Seq[Double])]
           .rdd.map { case (s, id, v) => (s, (id, v)) }
         searchShards[Seq[Double]](
-          vecRdd, edgeRdd, entryRdd, queryRdd, k, efSearch,
+          shards, vecRdd, queryRdd, k, efs,
           (vecs, height) => LocalGraphSearcher.raw(
             vecs.map(_.toArray), height, params)
         )
-    }).toDF("query_id", "neighbor_id", "dist")
-
-    // global merge: bounded-heap top-k per query (partial agg per shard
-    // output partition, O(|Q|*k) shuffle)
-    results
-      .groupBy(col("query_id"))
-      .agg(topK(col("dist"), col("neighbor_id"), k).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("query_id").as(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
+    }
+    mergeTopK(results, qidCol, k, curve)
   }
 
   /** Attribute-filtered batch search (the graph half of the filtered-ANN
@@ -540,39 +481,16 @@ object DistributedHnsw {
     val spark = shards.vectors.sparkSession
     import spark.implicits._
     val params = shards.params
-    val nShards = shards.numShards
-
     val baseRdd = flagged
       .as[(Int, Long, Seq[Double], Boolean)]
       .rdd.map { case (s, id, v, ok) => (s, (id, (v, ok))) }
-    val edgeRdd = shards.edges
-      .as[(Int, Int, Long, Long)]
-      .rdd.map { case (s, l, a, b) => (s, (l, a, b)) }
-    val entryRdd = shards.entries
-      .as[(Int, Long, Int)]
-      .rdd.map { case (s, ep, h) => (s, (ep, h)) }
-    val queryRdd = queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .rdd.flatMap { case (id, v) =>
-        (0 until nShards).iterator.map(s => (s, (id, v)))
-      }
     val results = searchShards[(Seq[Double], Boolean)](
-      baseRdd, edgeRdd, entryRdd, queryRdd, k, efSearch,
+      shards, baseRdd, fanOut(shards, queries, qidCol, qvecCol), k,
+      Array(efSearch),
       (payload, height) => LocalGraphSearcher.rawFiltered(
         payload.map(_._1.toArray), payload.map(_._2), height, params)
-    ).toDF("query_id", "neighbor_id", "dist")
-
-    results
-      .groupBy(col("query_id"))
-      .agg(topK(col("dist"), col("neighbor_id"), k).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("query_id").as(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
+    )
+    mergeTopK(results, qidCol, k, curve = false)
   }
 
   /** Shard-scoped compaction — the physical half of delete maintenance:
@@ -642,51 +560,30 @@ object DistributedHnsw {
   }
 
   /** The shard-cogroup search kernel, generic over the per-node payload
-    * (raw vectors or codes): replay the shard's edge table into a local
-    * searcher, run every query of the shard's query slice through it.
+    * (raw vectors, flagged vectors or codes): co-locate base table /
+    * edges / entry / the (shard, query) pairs per shard, replay the
+    * shard's edge table into a local searcher (no random level draws, so
+    * exactly the built graph), and run every query of the shard's slice
+    * through it — one descent per query shared across every ef via
+    * [[LocalGraphSearcher.searchMulti]]. Returns (ef, query_id,
+    * neighbor_id, dist).
     */
   private def searchShards[V: scala.reflect.ClassTag](
-      base: org.apache.spark.rdd.RDD[(Int, (Long, V))],
-      edges: org.apache.spark.rdd.RDD[(Int, (Int, Long, Long))],
-      entries: org.apache.spark.rdd.RDD[(Int, (Long, Int))],
-      queries: org.apache.spark.rdd.RDD[(Int, (Long, Seq[Double]))],
-      k: Int,
-      efSearch: Int,
-      mkSearcher: (Array[V], Int) => LocalGraphSearcher
-  ): org.apache.spark.rdd.RDD[(Long, Long, Double)] =
-    base.cogroup(edges, entries, queries)
-      .flatMap { case (_, (nodes, es, ens, qs)) =>
-        if (nodes.isEmpty || ens.isEmpty || qs.isEmpty) Iterator.empty
-        else {
-          val sorted = nodes.toArray.sortBy(_._1)
-          val ids = sorted.map(_._1)
-          val localOf = ids.zipWithIndex.toMap
-          val (ep, height) = ens.head
-          val searcher = mkSearcher(sorted.map(_._2), height)
-          es.foreach { case (l, a, b) =>
-            searcher.addEdge(l, localOf(a), localOf(b))
-          }
-          searcher.setEntry(localOf(ep))
-          qs.iterator.flatMap { case (qid, qv) =>
-            searcher.search(qv.toArray, k, efSearch).map { case (d, local) =>
-              (qid, ids(local), d)
-            }
-          }
-        }
-      }
-
-  /** [[searchShards]] for a whole ef curve: identical shard assembly (one
-    * sort, one adjacency rebuild), one descent per query shared across
-    * every ef via [[LocalGraphSearcher.searchMulti]]. */
-  private def searchShardsMulti[V: scala.reflect.ClassTag](
-      base: org.apache.spark.rdd.RDD[(Int, (Long, V))],
-      edges: org.apache.spark.rdd.RDD[(Int, (Int, Long, Long))],
-      entries: org.apache.spark.rdd.RDD[(Int, (Long, Int))],
-      queries: org.apache.spark.rdd.RDD[(Int, (Long, Seq[Double]))],
+      shards: Shards,
+      base: RDD[(Int, (Long, V))],
+      queries: RDD[(Int, (Long, Seq[Double]))],
       k: Int,
       efs: Array[Int],
       mkSearcher: (Array[V], Int) => LocalGraphSearcher
-  ): org.apache.spark.rdd.RDD[(Int, Long, Long, Double)] =
+  ): DataFrame = {
+    val spark = shards.vectors.sparkSession
+    import spark.implicits._
+    val edges = shards.edges
+      .as[(Int, Int, Long, Long)]
+      .rdd.map { case (s, l, a, b) => (s, (l, a, b)) }
+    val entries = shards.entries
+      .as[(Int, Long, Int)]
+      .rdd.map { case (s, ep, h) => (s, (ep, h)) }
     base.cogroup(edges, entries, queries)
       .flatMap { case (_, (nodes, es, ens, qs)) =>
         if (nodes.isEmpty || ens.isEmpty || qs.isEmpty) Iterator.empty
@@ -707,6 +604,31 @@ object DistributedHnsw {
           }
         }
       }
+      .toDF("ef", "query_id", "neighbor_id", "dist")
+  }
+
+  /** Global merge: bounded-heap top-k per query — per (ef, query) for a
+    * curve — with partial agg per shard output partition, O(|Q|*k)
+    * shuffle. Returns ([ef,] qidCol, neighbor_id, dist, rnk).
+    */
+  private def mergeTopK(
+      results: DataFrame, // ef int, query_id long, neighbor_id long, dist double
+      qidCol: String,
+      k: Int,
+      curve: Boolean
+  ): DataFrame = {
+    val keys = (if (curve) Seq(col("ef")) else Nil) :+ col("query_id")
+    results
+      .groupBy(keys: _*)
+      .agg(topK(col("dist"), col("neighbor_id"), k).as("tk"))
+      .select(keys :+ posexplode(col("tk")).as(Seq("pos", "e")): _*)
+      .select(
+        (if (curve) Seq(col("ef").cast("long").as("ef")) else Nil) ++ Seq(
+          col("query_id").as(qidCol),
+          col("e.id").as("neighbor_id"),
+          col("e.dist").as("dist"),
+          (col("pos") + 1).cast("int").as("rnk")): _*)
+  }
 }
 
 /** Read-only shard searcher: the [[HnswIndex]] search path over a replayed
@@ -742,34 +664,14 @@ final class LocalGraphSearcher private (
       distQ(q, _), adj(layer).getOrElse(_, Iterable.empty), ep, ef
     )
 
-  def search(
-      q: Array[Double],
-      topK: Int,
-      efSearch: Int = -1
-  ): IndexedSeq[(Double, Int)] = {
-    if (n == 0) return IndexedSeq.empty
-    val ef = math.max(if (efSearch > 0) efSearch else params.efSearch, topK)
-    var ep = entry
-    var lc = height - 1
-    // upper layers route only (their result never enters W) — descent is
-    // unfiltered even in a filtered search, the hnswlib semantics
-    while (lc > 0) {
-      ep = searchLayer(q, ep, 1, lc).head._2
-      lc -= 1
-    }
-    if (allow == null) searchLayer(q, ep, ef, 0).take(topK)
-    else
-      HnswTraversal.searchLayerFiltered(
-        distQ(q, _), adj(0).getOrElse(_, Iterable.empty), ep, ef, allow
-      ).take(topK)
-  }
-
-  /** Multi-ef search sharing the ef-INDEPENDENT work: the upper-layer
-    * greedy descent routes with ef=1 regardless of efSearch, so an
-    * operating curve that re-descends per setting pays |layers| greedy
-    * walks × |efs| for identical routing. One descent, then one layer-0
-    * beam per ef — each (ef, result) is bit-equal to [[search]] at that
-    * ef (spec-gated). Returns (ef, dist, localId) triples.
+  /** The [[HnswIndex]] search for one query at every ef in `efs` (a
+    * plain search passes one ef; ef ≤ 0 means `params.efSearch`). The
+    * upper-layer greedy descent routes with ef=1 regardless of efSearch,
+    * so it runs once and is shared: an operating curve that re-descended
+    * per setting would pay |layers| greedy walks × |efs| for identical
+    * routing. Then one layer-0 beam per ef — each (ef, result) is
+    * bit-equal to a single-ef search at that ef (spec-gated). Returns
+    * (ef, dist, localId) triples.
     */
   def searchMulti(
       q: Array[Double],
@@ -779,6 +681,8 @@ final class LocalGraphSearcher private (
     if (n == 0) return Iterator.empty
     var ep = entry
     var lc = height - 1
+    // upper layers route only (their result never enters W) — descent is
+    // unfiltered even in a filtered search, the hnswlib semantics
     while (lc > 0) {
       ep = searchLayer(q, ep, 1, lc).head._2
       lc -= 1

@@ -70,22 +70,17 @@ object FacilityLocation {
     require(pool.nonEmpty, "empty candidate pool")
     require(k <= pool.length, s"k=$k > pool size ${pool.length}")
 
-    // candidate norms on the driver with the same ascending fold +
-    // math.sqrt the SQL replay uses (bit-identical), so the per-row work
-    // is m dots + ONE corpus-vector norm — not m norm recomputations
-    def l2NormLocal(c: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
     // native codegen'd dot kernel (DotExpr == the aggregate/zip_with
     // fold, same ascending accumulation — the RewriteVectorKernels
     // contract), so the m-wide sims build never routes through
     // interpreted higher-order functions
     import graft.functions.VectorExpressions.dotFast
+    // candidate norms on the driver with the same ascending fold +
+    // math.sqrt the SQL replay uses (bit-identical), so the per-row work
+    // is m dots + ONE corpus-vector norm — not m norm recomputations
     def unitSim(c: Seq[Double]): Column =
       (lit(1.0) + dotFast(col("v"), typedLit(c)) /
-        (col("nrm") * lit(l2NormLocal(c)))) / 2.0
+        (col("nrm") * lit(KMeansLocal.l2Norm(c)))) / 2.0
 
     // one scan: width-m similarity array + cur = 0; checkpoint once
     var state = corpus
@@ -153,17 +148,12 @@ object FacilityLocation {
     val corpus = df.select(
       col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    def l2NormLocal(c: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
     // struct (sim, -pickId): lexicographic max = highest sim, ties to
     // the LOWEST pick id
     val cands = picks.map { case (pid, c) =>
       struct(
         ((lit(1.0) + dotFast(col("v"), typedLit(c)) /
-          (col("nrm") * lit(l2NormLocal(c)))) / 2.0).as("sim"),
+          (col("nrm") * lit(KMeansLocal.l2Norm(c)))) / 2.0).as("sim"),
         lit(-pid).as("negpid"))
     }
     corpus

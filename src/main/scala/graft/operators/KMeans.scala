@@ -39,6 +39,15 @@ object KMeansLocal {
     s
   }
 
+  /** L2 norm as an ascending fold + `math.sqrt` — the fold the SQL
+    * replays use, so a driver-side norm is bit-identical to theirs.
+    */
+  def l2Norm(c: Seq[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < c.length) { s += c(i) * c(i); i += 1 }
+    math.sqrt(s)
+  }
+
   /** k-means++ seeding (ref: py/pq.py:80-138): first centroid uniform,
     * each next sampled with probability proportional to min squared
     * distance to the already-chosen set.

@@ -259,7 +259,6 @@ object NNDescent {
     val q = queries.select(
       col(qidCol).cast("long").as("qid"),
       col(qvecCol).cast("array<double>").as("qvec"))
-    val edges = graph.select(col("src"), col("dst"))
 
     def scored(cand: DataFrame): DataFrame = // (qid, id) -> + dist
       cand
@@ -273,37 +272,7 @@ object NNDescent {
     require(
       v.filter(col("id") === entryId).limit(1).count() == 1,
       s"beamSearch: entryId $entryId is not an id in the vector table")
-    var state = scored(q.select(col("qid"), lit(entryId).as("id")))
-    var r = 0
-    while (r < rounds) {
-      val expanded = state
-        .join(edges.withColumnRenamed("src", "id"), "id")
-        .select(col("qid"), col("dst").as("id"))
-        .distinct()
-      state = scored(expanded)
-        .unionAll(state)
-        .groupBy(col("qid"), col("id"))
-        .agg(min(col("dist")).as("dist"))
-        .groupBy(col("qid"))
-        .agg(topK(col("dist"), col("id"), beam).as("tk"))
-        .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
-        .select(col("qid"), col("e.id").as("id"), col("e.dist").as("dist"))
-        // each round references the previous state TWICE (expansion +
-        // merge), so an unmaterialized lineage grows ~3^rounds; truncate
-        // it — the state is |Q|·beam rows, the iterative-algorithm
-        // analog of distributedRank's evaluate-once checkpoint
-        .localCheckpoint()
-      r += 1
-    }
-    state
-      .groupBy(col("qid"))
-      .agg(topK(col("dist"), col("id"), k).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("qid").as("query_id"),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    rankTopK(walk(graph, q, scored, beam, rounds, entryId), k)
   }
 
   /** [[beamSearch]] in the DiskANN serving layout: the WALK reads only a
@@ -349,7 +318,6 @@ object NNDescent {
       // the LUT table is |Q| rows × M·K doubles — evaluate once, every
       // round's scoring joins it
       .localCheckpoint()
-    val edges = graph.select(col("src"), col("dst"))
 
     def scoredAdc(cand: DataFrame): DataFrame = // (qid, id) -> + ADC dist
       cand
@@ -361,14 +329,44 @@ object NNDescent {
     require(
       c.filter(col("id") === entryId).limit(1).count() == 1,
       s"beamSearchCompressed: entryId $entryId is not in the code table")
-    var state = scoredAdc(q.select(col("qid"), lit(entryId).as("id")))
+    val state = walk(graph, q, scoredAdc, beam, rounds, entryId)
+    // exact rerank: the ONLY raw-vector read, over ≤ |Q|·beam rows
+    val v = vecs.select(
+      col(idCol).cast("long").as("id"),
+      col(vecCol).cast("array<double>").as("vec"))
+    rankTopK(
+      state
+        .select(col("qid"), col("id"))
+        .join(v, "id")
+        .join(q.select(col("qid"), col("qvec")), "qid")
+        .select(col("qid"), col("id"),
+          l2SqFast(col("qvec"), col("vec")).as("dist")),
+      k)
+  }
+
+  /** The beam round loop behind [[beamSearch]] and
+    * [[beamSearchCompressed]]: seed every query (`q`'s qid) at the entry
+    * node, then per round expand the beam through the edge table, score
+    * the new candidates with `score` ((qid, id) -> + dist), and keep the
+    * best `beam` per query. Returns the final (qid, id, dist) state.
+    */
+  private def walk(
+      graph: DataFrame, // src long, dst long
+      q: DataFrame,
+      score: DataFrame => DataFrame,
+      beam: Int,
+      rounds: Int,
+      entryId: Long
+  ): DataFrame = {
+    val edges = graph.select(col("src"), col("dst"))
+    var state = score(q.select(col("qid"), lit(entryId).as("id")))
     var r = 0
     while (r < rounds) {
       val expanded = state
         .join(edges.withColumnRenamed("src", "id"), "id")
         .select(col("qid"), col("dst").as("id"))
         .distinct()
-      state = scoredAdc(expanded)
+      state = score(expanded)
         .unionAll(state)
         .groupBy(col("qid"), col("id"))
         .agg(min(col("dist")).as("dist"))
@@ -376,19 +374,21 @@ object NNDescent {
         .agg(topK(col("dist"), col("id"), beam).as("tk"))
         .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
         .select(col("qid"), col("e.id").as("id"), col("e.dist").as("dist"))
-        .localCheckpoint() // same 3^rounds lineage argument as beamSearch
+        // each round references the previous state TWICE (expansion +
+        // merge), so an unmaterialized lineage grows ~3^rounds; truncate
+        // it — the state is |Q|·beam rows, the iterative-algorithm
+        // analog of distributedRank's evaluate-once checkpoint
+        .localCheckpoint()
       r += 1
     }
-    // exact rerank: the ONLY raw-vector read, over ≤ |Q|·beam rows
-    val v = vecs.select(
-      col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
     state
-      .select(col("qid"), col("id"))
-      .join(v, "id")
-      .join(q.select(col("qid"), col("qvec")), "qid")
-      .select(col("qid"), col("id"),
-        l2SqFast(col("qvec"), col("vec")).as("dist"))
+  }
+
+  /** Best k of each query's (qid, id, dist) rows, as (query_id,
+    * neighbor_id, dist, rnk) with rnk 1..k by (dist, id).
+    */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    scored
       .groupBy(col("qid"))
       .agg(topK(col("dist"), col("id"), k).as("tk"))
       .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
@@ -397,7 +397,6 @@ object NNDescent {
         col("e.id").as("neighbor_id"),
         col("e.dist").as("dist"),
         (col("pos") + 1).cast("long").as("rnk"))
-  }
 
   /** Recall of an approximate kNN graph against the exact one (both as
     * (src, dst) edge sets restricted to rnk <= k): |approx ∩ exact| /

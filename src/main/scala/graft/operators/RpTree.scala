@@ -245,6 +245,13 @@ object RpTree {
             while (wi < ws.length && it.hasNext) {
               val r = it.next()
               if (off == ws(wi)._1) {
+                // the offset was counted by the first pass over the same
+                // checkpointed rows; a drift in row order between the two
+                // passes would pick another node's projection — fail loudly
+                require(r.getInt(0) == ws(wi)._2 && r.getLong(1) == ws(wi)._3,
+                  s"levelMedians: row at partition $pid offset $off is " +
+                    s"(${r.getInt(0)}, ${r.getLong(1)}), expected " +
+                    s"(${ws(wi)._2}, ${ws(wi)._3})")
                 out += (((ws(wi)._2, ws(wi)._3), r.getDouble(2)))
                 wi += 1
               }

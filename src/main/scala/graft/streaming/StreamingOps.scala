@@ -34,6 +34,18 @@ object StreamingOps {
     sb.toString
   }
 
+  /** The batch `md5Long` mod 1e9+7: the first 14 hex chars (= 7 bytes) of
+    * md5 read base 16, with the same caller-held digest as [[md5Hex]].
+    */
+  private[graft] def md5Mod(md: java.security.MessageDigest, s: String): Long = {
+    md.reset()
+    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    var v = 0L
+    var i = 0
+    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
+    v % 1000000007L
+  }
+
   /** Parquet schema of the driver's events table when nanos are read as
     * longs (spark.sql.legacy.parquet.nanosAsLong=true).
     */
@@ -768,15 +780,6 @@ object StreamingOps {
         val buckets = bcBuckets.value
         val sets = bcSets.value
         val md = java.security.MessageDigest.getInstance("MD5")
-        // batch md5Long: first 14 hex chars (= 7 bytes) of md5, base 16
-        def md5Mod(s: String): Long = {
-          md.reset()
-          val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var i = 0
-          while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-          v % 1000000007L
-        }
         it.filter { case (_, text) =>
           val toks = text.split(" ", -1)
           if (toks.length < n) true // shorter than n ⇒ no shingles ⇒ clean
@@ -792,7 +795,7 @@ object StreamingOps {
             }
             val mins = Array.fill(numPerms)(Long.MaxValue)
             sh.foreach { s =>
-              val x = md5Mod(s)
+              val x = StreamingOps.md5Mod(md, s)
               var p = 0
               while (p < numPerms) {
                 val v = ((2L * p + 1) * x + 12289L * p) % 1000000007L
@@ -1223,16 +1226,12 @@ object StreamingOps {
       vecCol: String
   ): DataFrame = {
     import graft.functions.VectorExpressions.dotFast
+    import graft.operators.KMeansLocal
     require(picks.nonEmpty, "empty pick set")
-    def l2NormLocal(c: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
     val cands = picks.map { case (pid, c) =>
       struct(
         ((lit(1.0) + dotFast(col(vecCol), typedLit(c)) /
-          (col("nrm") * lit(l2NormLocal(c)))) / 2.0).as("sim"),
+          (col("nrm") * lit(KMeansLocal.l2Norm(c)))) / 2.0).as("sim"),
         lit(-pid).as("negpid"))
     }
     vecs
@@ -1761,14 +1760,6 @@ object StreamingOps {
         val sets = bcSets.value
         val (evH, evM) = bcSpans.value
         val md = java.security.MessageDigest.getInstance("MD5")
-        def md5Mod(s: String): Long = {
-          md.reset()
-          val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var i = 0
-          while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-          v % 1000000007L
-        }
         it.map { case (id, text) =>
           val toks = text.split(" ", -1)
           // rung 1: distinct nExact-grams hitting the eval set
@@ -1799,7 +1790,7 @@ object StreamingOps {
               }
               val mins = Array.fill(numPerms)(Long.MaxValue)
               sh.foreach { s =>
-                val x = md5Mod(s)
+                val x = StreamingOps.md5Mod(md, s)
                 var p = 0
                 while (p < numPerms) {
                   val v = ((2L * p + 1) * x + 12289L * p) % 1000000007L

@@ -3,10 +3,10 @@
 
 Usage: tools/scaling2.py small.json big.json label_small label_big [decade]
 
-Like tools/scaling.py but label- and ratio-generic: `decade` is the data
-growth factor between the two files (default 10). Emits a markdown table
-over ALL queries present in the big file, sorted by big-file time, with
-exponent = log(ratio)/log(decade). Rows whose small-file time sits under
+Label- and ratio-generic: `decade` is the data growth factor between the
+two files (default 10). Emits a markdown table over ALL queries present
+in the big file, sorted by big-file time (pipe through `head` for the
+slowest N), with exponent = log(ratio)/log(decade). Rows whose small-file time sits under
 0.5 s are marked 'floor' (Spark per-job scheduling floor dominates).
 Telemetry columns (GC share of wall, disk spill) ride along when present
 in the big file, so a super-linear row carries its mechanism.
