@@ -217,7 +217,9 @@ class FingerprintSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     }
 
   test("DistributedHnsw.search raw: output md5 pinned at both SFs") {
-    pinned("hnsw search", Seq(sf001 -> "1a684bbbdabd829dba1b886348000ad8", sf0001 -> "b1fd15262a7da7c6c1ab368f8fa4c44c")) { dir =>
+    pinned("hnsw search", Seq(
+        sf001 -> "1a684bbbdabd829dba1b886348000ad8",
+        sf0001 -> "b1fd15262a7da7c6c1ab368f8fa4c44c")) { dir =>
       rowsFingerprint(DistributedHnsw.search(
         rawShardsAt(dir), hnswQueries(dir), "query_id", "qv", k = 10))
     }
@@ -225,7 +227,9 @@ class FingerprintSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("DistributedHnsw.search with PQCompression: output md5 pinned at both SFs") {
     import graft.operators.PQCompression
-    pinned("hnsw pq search", Seq(sf001 -> "7b0ee7def6dbf1dad0f85f6ba0a243db", sf0001 -> "3c92fe8900d011403d017ea51f5589d5")) { dir =>
+    pinned("hnsw pq search", Seq(
+        sf001 -> "7b0ee7def6dbf1dad0f85f6ba0a243db",
+        sf0001 -> "3c92fe8900d011403d017ea51f5589d5")) { dir =>
       val comp = new PQCompression(idSortedPq(dir, m = 8, k = 64, seed = 42))
       val s = DistributedHnsw.build(
         embeddings(dir), "vec_id", "vec",
@@ -239,7 +243,9 @@ class FingerprintSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("DistributedHnsw.searchEfCurve: output md5 pinned at both SFs") {
-    pinned("hnsw ef curve", Seq(sf001 -> "c2aaf808425843bb8cd62a5130dc89f2", sf0001 -> "6639f5583081133392176c308d2df862")) { dir =>
+    pinned("hnsw ef curve", Seq(
+        sf001 -> "c2aaf808425843bb8cd62a5130dc89f2",
+        sf0001 -> "6639f5583081133392176c308d2df862")) { dir =>
       rowsFingerprint(DistributedHnsw.searchEfCurve(
         rawShardsAt(dir), hnswQueries(dir), "query_id", "qv", k = 10,
         Seq(10, 40, 200)))
@@ -247,7 +253,9 @@ class FingerprintSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("DistributedHnsw.searchFiltered under a 50% allow set: output md5 pinned at both SFs") {
-    pinned("hnsw filtered search", Seq(sf001 -> "45231c29e397bbb7b11db2b08bd7f732", sf0001 -> "201ff167b683ab46920afd1201791aaf")) { dir =>
+    pinned("hnsw filtered search", Seq(
+        sf001 -> "45231c29e397bbb7b11db2b08bd7f732",
+        sf0001 -> "201ff167b683ab46920afd1201791aaf")) { dir =>
       rowsFingerprint(DistributedHnsw.searchFiltered(
         rawShardsAt(dir), hnswQueries(dir), "query_id", "qv", k = 10,
         allowedIds = embeddings(dir).filter(col("label") <= 4).select(col("vec_id")),
@@ -265,7 +273,9 @@ class FingerprintSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("NNDescent.beamSearch: output md5 pinned at both SFs") {
     import graft.operators.NNDescent
-    pinned("beam search", Seq(sf001 -> "b2c721c56c430efd06d814cd629dc96f", sf0001 -> "e1995b7b026fa0e475a979face9079d0")) { dir =>
+    pinned("beam search", Seq(
+        sf001 -> "b2c721c56c430efd06d814cd629dc96f",
+        sf0001 -> "e1995b7b026fa0e475a979face9079d0")) { dir =>
       val emb = embeddings(dir).select(col("vec_id").as("id"), col("vec"))
       rowsFingerprint(NNDescent.beamSearch(
         prunedGraph(dir), emb, "id", "vec", hnswQueries(dir), "query_id", "qv",
@@ -275,7 +285,9 @@ class FingerprintSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("NNDescent.beamSearchCompressed: output md5 pinned at both SFs") {
     import graft.operators.{NNDescent, ProductQuantizer}
-    pinned("compressed beam search", Seq(sf001 -> "9964bf0350436fced47f51dbcf82630f", sf0001 -> "8d0c03851abd6e2e471c90a7fbf6046b")) { dir =>
+    pinned("compressed beam search", Seq(
+        sf001 -> "9964bf0350436fced47f51dbcf82630f",
+        sf0001 -> "8d0c03851abd6e2e471c90a7fbf6046b")) { dir =>
       val emb = embeddings(dir).select(col("vec_id").as("id"), col("vec"))
       val model = idSortedPq(dir, m = 8, k = 16, seed = 7)
       val codes = emb.select(
